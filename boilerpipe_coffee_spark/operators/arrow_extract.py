@@ -1,4 +1,4 @@
-"""Arrow-native production extraction.
+"""Arrow-native production extraction and the one Arrow span bridge.
 
 ``mapInArrow`` variant of the extract operator: reads the ``spans``
 list<struct> column as four flat arrays (one ``to_pylist`` each, all
@@ -7,6 +7,10 @@ conversion and no per-span dict objects on either side of the bridge.
 Cuts the per-document bridge overhead to a fraction of the parse cost,
 which is what keeps python workers CPU-bound (and the N->4N scaling
 flat) instead of serialization-bound.
+
+:func:`read_spans` and :class:`SpanListBuilder` are the bridge every
+Arrow stage uses (here, the balanced giant split and the staged path);
+the Arrow types are derived from the Spark schemas in ``sources``.
 """
 
 from __future__ import annotations
@@ -15,137 +19,115 @@ from typing import Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..core.extractors import ARTICLE, document_from_html
-from ..core.jsquirks import ReferenceThrow
+from ..core.extractors import ARTICLE
 from ..sources import OUTPUT_SCHEMA
-from ..spans import REFERENCE_THROW
+from ..spans import extract_flat
 
-_OUT_SPAN = pa.struct(
-    [
-        pa.field("kind", pa.string()),
-        pa.field("text", pa.string()),
-        pa.field("media_ref", pa.string()),
-        pa.field("order", pa.int32()),
-    ]
-)
-_OUT_SCHEMA = pa.schema(
-    [
-        pa.field("doc_id", pa.string()),
-        pa.field("title", pa.string()),
-        pa.field("spans", pa.list_(_OUT_SPAN)),
-        pa.field("error", pa.string()),
-    ]
-)
+OUTPUT_ARROW = to_arrow_schema(OUTPUT_SCHEMA)
+OUT_SPANS = OUTPUT_ARROW.field("spans").type
 
 
-def _extract_one(kinds, texts, refs, offs, lo, hi, extractor):
-    """Extract one document from flat span arrays [lo, hi).
+def read_spans(batch: pa.RecordBatch):
+    """Flatten a (doc_id, spans) batch.
 
-    Returns (title, out_kinds, out_texts, out_refs, error); out_* are
-    parallel lists, orders implicit by position.
+    Returns ``(doc_ids, kinds, texts, refs, offs, bounds)``: the span
+    fields as flat lists and ``bounds[i] = (lo, hi)``, document i's
+    slice of them.  The list offsets are paired with the UNFLATTENED
+    child array: ``value_lengths()`` maps null slots to 0 but
+    ``flatten()`` drops their backing ranges, which would desynchronize
+    every later document if a null slot ever carried values; a null
+    list reads as empty.
     """
-    text_spans = []  # (offset, text)
-    media = []  # (offset, kind, ref)
-    for i in range(lo, hi):
-        if kinds[i] == "text":
-            text_spans.append((offs[i], texts[i] or ""))
-        else:
-            media.append((offs[i], kinds[i], refs[i]))
-    text_spans.sort(key=lambda t: t[0])
-    media.sort(key=lambda t: t[0])
+    doc_ids = batch.column("doc_id").to_pylist()
+    spans = batch.column("spans")
+    offsets = spans.offsets.to_pylist()
+    valid = spans.is_valid().to_pylist()
+    values = spans.values
+    bounds = [
+        (offsets[i], offsets[i + 1]) if valid[i] else (0, 0)
+        for i in range(len(doc_ids))
+    ]
+    return (
+        doc_ids,
+        values.field("kind").to_pylist(),
+        values.field("text").to_pylist(),
+        values.field("media_ref").to_pylist(),
+        values.field("offset").to_pylist(),
+        bounds,
+    )
 
-    parts = []
-    starts = []  # char start per text span
-    span_offsets = []
-    at = 0
-    for off, t in text_spans:
-        starts.append(at)
-        span_offsets.append(off)
-        parts.append(t)
-        at += len(t)
-    html = "".join(parts)
 
-    try:
-        doc = document_from_html(html, extractor)
-    except ReferenceThrow:
-        return "", [], [], [], REFERENCE_THROW
+class SpanListBuilder:
+    """Accumulates one span list per document as flat field lists and
+    builds the ``list<struct<kind, text, media_ref, order|offset>>``
+    column in one Arrow call."""
 
-    from bisect import bisect_right
+    def __init__(self, list_type: pa.ListType = OUT_SPANS):
+        self.list_type = list_type
+        self.kinds, self.texts, self.refs, self.nums = [], [], [], []
+        self.offsets = [0]
 
-    keyed = []
-    for tb in doc.text_blocks:
-        if not tb.is_content:
-            continue
-        if tb.src_pos >= 0 and starts:
-            so = span_offsets[bisect_right(starts, tb.src_pos) - 1]
-        else:
-            so = span_offsets[0] if span_offsets else 0
-        keyed.append(((so, tb.offset_start), "text", tb.text, None))
-    for off, kind, ref in media:
-        keyed.append(((off, -1), kind, None, ref))
-    keyed.sort(key=lambda item: item[0])
-    ok = [k for _, k, _, _ in keyed]
-    ot = [t for _, _, t, _ in keyed]
-    orf = [r for _, _, _, r in keyed]
-    return doc.title, ok, ot, orf, None
+    def add(self, kinds, texts, refs, nums=None):
+        """Append one document's spans; ``nums`` defaults to the output
+        ``order`` 0..n-1."""
+        self.kinds.extend(kinds)
+        self.texts.extend(texts)
+        self.refs.extend(refs)
+        self.nums.extend(range(len(kinds)) if nums is None else nums)
+        self.offsets.append(len(self.kinds))
+
+    def build(self) -> pa.ListArray:
+        fields = list(self.list_type.value_type)
+        struct = pa.StructArray.from_arrays(
+            [
+                pa.array(col, f.type)
+                for col, f in zip(
+                    (self.kinds, self.texts, self.refs, self.nums), fields
+                )
+            ],
+            fields=fields,
+        )
+        return pa.ListArray.from_arrays(
+            pa.array(self.offsets, pa.int32()), struct, type=self.list_type
+        )
+
+
+def output_batch(doc_ids, titles, spans: SpanListBuilder, errors):
+    """One OUTPUT_SCHEMA record batch."""
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(doc_ids, pa.string()),
+            pa.array(titles, pa.string()),
+            spans.build(),
+            pa.array(errors, pa.string()),
+        ],
+        schema=OUTPUT_ARROW,
+    )
 
 
 def extract_arrow(df: DataFrame, extractor: str = ARTICLE) -> DataFrame:
+    """(doc_id, spans) -> (doc_id, title, spans, error), one stage.
+
+    Reference parity: output spans match lib/Boilerpipe.js per document
+    (golden suite); documents on which the reference throws (quirk Q9 /
+    nested <a>) or with a null span offset come back with an error and
+    empty spans instead of failing the job.
+    """
+
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            spans_col = batch.column("spans")
-            # pair the list offsets with the UNFLATTENED child array:
-            # value_lengths() maps null slots to 0 but flatten() drops
-            # their backing ranges, which would desynchronize every
-            # later document if a null slot ever carried values
-            in_offsets = spans_col.offsets.to_pylist()
-            valid = spans_col.is_valid().to_pylist()
-            values = spans_col.values
-            kinds = values.field("kind").to_pylist()
-            texts = values.field("text").to_pylist()
-            refs = values.field("media_ref").to_pylist()
-            offs = values.field("offset").to_pylist()
-
+            doc_ids, kinds, texts, refs, offs, bounds = read_spans(batch)
             titles, errors = [], []
-            flat_k, flat_t, flat_r, flat_o = [], [], [], []
-            list_offsets = [0]
-            for i in range(len(doc_ids)):
-                lo, hi = (
-                    (in_offsets[i], in_offsets[i + 1]) if valid[i] else (0, 0)
-                )
-                title, ok, ot, orf, err = _extract_one(
+            out = SpanListBuilder()
+            for lo, hi in bounds:
+                title, ok, ot, orf, err = extract_flat(
                     kinds, texts, refs, offs, lo, hi, extractor
                 )
                 titles.append(title)
                 errors.append(err)
-                flat_k.extend(ok)
-                flat_t.extend(ot)
-                flat_r.extend(orf)
-                flat_o.extend(range(len(ok)))
-                list_offsets.append(len(flat_k))
-
-            struct_arr = pa.StructArray.from_arrays(
-                [
-                    pa.array(flat_k, pa.string()),
-                    pa.array(flat_t, pa.string()),
-                    pa.array(flat_r, pa.string()),
-                    pa.array(flat_o, pa.int32()),
-                ],
-                fields=list(_OUT_SPAN),
-            )
-            spans_out = pa.ListArray.from_arrays(
-                pa.array(list_offsets, pa.int32()), struct_arr
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(doc_ids, pa.string()),
-                    pa.array(titles, pa.string()),
-                    spans_out,
-                    pa.array(errors, pa.string()),
-                ],
-                schema=_OUT_SCHEMA,
-            )
+                out.add(ok, ot, orf)
+            yield output_batch(doc_ids, titles, out, errors)
 
     return df.mapInArrow(run, schema=OUTPUT_SCHEMA)

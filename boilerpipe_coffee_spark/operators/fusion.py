@@ -11,7 +11,7 @@ hash-partitioned by doc_id and sorted (doc_id, is_media, block_offset),
 so documents are CONTIGUOUS runs within each partition.  Instead of
 ``groupBy().applyInPandas`` -- which pays a per-group python call
 (~1 ms) that dwarfs the per-document work at millions of tiny groups --
-we stream whole partitions through ``mapInPandas`` and split doc runs
+we stream whole partitions through ``mapInArrow`` and split doc runs
 ourselves, carrying the tail rows of each Arrow batch into the next so
 a document straddling batch boundaries is never split.  Same single
 exchange, ~20x less per-doc overhead.
@@ -53,7 +53,8 @@ from ..core.filters import (
 )
 from ..core.jsquirks import ReferenceThrow
 from ..sources import OUTPUT_SCHEMA
-from ..spans import REFERENCE_THROW
+from ..spans import REFERENCE_THROW, interleave
+from .arrow_extract import SpanListBuilder, output_batch
 
 _TAILS = {
     "ArticleExtractor": lambda: [
@@ -103,8 +104,8 @@ def _process_doc(doc_id, cols, lo, hi, tail_factory):
     blocks-then-media.  Column-wise access avoids materializing a tuple
     per row on the Arrow->Python bridge (measured ~17% of tail time).
 
-    Returns (title, [(kind, text, media_ref), ...], error) -- span
-    orders are implicit by position."""
+    Returns (title, kinds, texts, media_refs, error) like
+    :func:`..spans.extract_flat`."""
     (c_doc, c_title, c_ismedia, c_boff, c_soff, c_text, c_tag, c_nw,
      c_nwa, c_nww, c_nwl, c_kind, c_ref, c_moff, c_err, c_isc,
      c_eot) = cols
@@ -113,11 +114,11 @@ def _process_doc(doc_id, cols, lo, hi, tail_factory):
     media = []
     for i in range(lo, hi):
         if c_err[i] is not None:
-            return "", [], c_err[i]
+            return "", [], [], [], c_err[i]
         if not title and c_title[i]:
             title = c_title[i]
         if c_ismedia[i]:
-            media.append((c_kind[i], c_ref[i], int(c_moff[i])))
+            media.append((int(c_moff[i]), c_kind[i], c_ref[i]))
             continue
         if c_kind[i] == "empty":  # zero-block placeholder row
             continue
@@ -142,34 +143,14 @@ def _process_doc(doc_id, cols, lo, hi, tail_factory):
         for f in tail_factory():
             f.process(doc)
     except ReferenceThrow:
-        return "", [], REFERENCE_THROW
+        return "", [], [], [], REFERENCE_THROW
 
-    keyed = [
-        ((tb.src_pos, tb.offset_start), "text", tb.text, None)
-        for tb in doc.text_blocks
-        if tb.is_content
-    ]
-    keyed.extend(((off, -1), kind, None, ref) for kind, ref, off in media)
-    keyed.sort(key=lambda item: item[0])
-    return title, [(k, t, r) for _, k, t, r in keyed], None
-
-
-_OUT_SPAN = pa.struct(
-    [
-        pa.field("kind", pa.string()),
-        pa.field("text", pa.string()),
-        pa.field("media_ref", pa.string()),
-        pa.field("order", pa.int32()),
-    ]
-)
-_PA_OUT = pa.schema(
-    [
-        pa.field("doc_id", pa.string()),
-        pa.field("title", pa.string()),
-        pa.field("spans", pa.list_(_OUT_SPAN)),
-        pa.field("error", pa.string()),
-    ]
-)
+    ok, ot, orf = interleave(
+        [(tb.src_pos, tb.offset_start, tb.text)
+         for tb in doc.text_blocks if tb.is_content],
+        media,
+    )
+    return title, ok, ot, orf, None
 
 
 def fuse_and_assemble(blocks: DataFrame, extractor: str,
@@ -204,41 +185,15 @@ def fuse_and_assemble(blocks: DataFrame, extractor: str,
             if not docs:
                 return None
             doc_ids, titles, errors = [], [], []
-            flat_k, flat_t, flat_r, flat_o = [], [], [], []
-            offsets = [0]
+            out = SpanListBuilder()
             for d, dcols, lo, hi in docs:
-                title, spans, err = _process_doc(d, dcols, lo, hi,
-                                                 tail_factory)
+                title, ok, ot, orf, err = _process_doc(d, dcols, lo, hi,
+                                                       tail_factory)
                 doc_ids.append(d)
                 titles.append(title)
                 errors.append(err)
-                for k, t, r in spans:
-                    flat_k.append(k)
-                    flat_t.append(t)
-                    flat_r.append(r)
-                flat_o.extend(range(len(spans)))
-                offsets.append(len(flat_k))
-            struct_arr = pa.StructArray.from_arrays(
-                [
-                    pa.array(flat_k, pa.string()),
-                    pa.array(flat_t, pa.string()),
-                    pa.array(flat_r, pa.string()),
-                    pa.array(flat_o, pa.int32()),
-                ],
-                fields=list(_OUT_SPAN),
-            )
-            spans_out = pa.ListArray.from_arrays(
-                pa.array(offsets, pa.int32()), struct_arr
-            )
-            return pa.RecordBatch.from_arrays(
-                [
-                    pa.array(doc_ids, pa.string()),
-                    pa.array(titles, pa.string()),
-                    spans_out,
-                    pa.array(errors, pa.string()),
-                ],
-                schema=_PA_OUT,
-            )
+                out.add(ok, ot, orf)
+            return output_batch(doc_ids, titles, out, errors)
 
         for batch in batches:
             if batch.num_rows == 0:

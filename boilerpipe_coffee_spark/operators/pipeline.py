@@ -26,7 +26,11 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, BooleanType, StructField, StructType
 
+from ..sources import OUTPUT_SCHEMA, SPAN_STRUCT
+from ..spans import extract_flat
+from .arrow_extract import SpanListBuilder, read_spans
 from .arrow_extract import extract_arrow as extract
 
 
@@ -217,12 +221,14 @@ def run_partitioned(
     }
 
 
-_BALANCED_MID_DDL = (
-    "doc_id string, title string, "
-    "spans array<struct<kind:string,text:string,media_ref:string,"
-    "`order`:int>>, error string, "
-    "raw array<struct<kind:string,text:string,media_ref:string,"
-    "offset:int>>, done boolean"
+# extract_balanced's intermediate: extracted output for normal docs,
+# the raw spans of giant docs (done=false) for the second pass
+_BALANCED_MID = StructType(
+    OUTPUT_SCHEMA.fields
+    + [
+        StructField("raw", ArrayType(SPAN_STRUCT)),
+        StructField("done", BooleanType()),
+    ]
 )
 
 
@@ -271,50 +277,18 @@ def extract_balanced(
     from typing import Iterator
 
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.storagelevel import StorageLevel
 
-    from .arrow_extract import _extract_one, _OUT_SPAN, extract_arrow
-
-    _IN_SPAN = pa.struct(
-        [
-            pa.field("kind", pa.string()),
-            pa.field("text", pa.string()),
-            pa.field("media_ref", pa.string()),
-            pa.field("offset", pa.int32()),
-        ]
-    )
-    mid_schema = pa.schema(
-        [
-            pa.field("doc_id", pa.string()),
-            pa.field("title", pa.string()),
-            pa.field("spans", pa.list_(_OUT_SPAN)),
-            pa.field("error", pa.string()),
-            pa.field("raw", pa.list_(_IN_SPAN)),
-            pa.field("done", pa.bool_()),
-        ]
-    )
+    mid_arrow = to_arrow_schema(_BALANCED_MID)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            spans_col = batch.column("spans")
-            in_offsets = spans_col.offsets.to_pylist()
-            valid = spans_col.is_valid().to_pylist()
-            values = spans_col.values
-            kinds = values.field("kind").to_pylist()
-            texts = values.field("text").to_pylist()
-            refs = values.field("media_ref").to_pylist()
-            offs = values.field("offset").to_pylist()
-
+            doc_ids, kinds, texts, refs, offs, bounds = read_spans(batch)
             titles, errors, dones = [], [], []
-            flat_k, flat_t, flat_r, flat_o = [], [], [], []
-            out_lo = [0]
-            raw_k, raw_t, raw_r, raw_off = [], [], [], []
-            raw_lo = [0]
-            for i in range(len(doc_ids)):
-                lo, hi = (
-                    (in_offsets[i], in_offsets[i + 1]) if valid[i] else (0, 0)
-                )
+            out = SpanListBuilder()
+            raw = SpanListBuilder(mid_arrow.field("raw").type)
+            for lo, hi in bounds:
                 if probe is not None:
                     probe.add(1)
                 size = 0
@@ -322,62 +296,33 @@ def extract_balanced(
                     if kinds[j] == "text" and texts[j]:
                         size += len(texts[j])
                 if size <= giant_chars:
-                    title, ok, ot, orf, err = _extract_one(
+                    title, ok, ot, orf, err = extract_flat(
                         kinds, texts, refs, offs, lo, hi, extractor
                     )
                     titles.append(title)
                     errors.append(err)
                     dones.append(True)
-                    flat_k.extend(ok)
-                    flat_t.extend(ot)
-                    flat_r.extend(orf)
-                    flat_o.extend(range(len(ok)))
+                    out.add(ok, ot, orf)
+                    raw.add([], [], [], [])
                 else:
                     titles.append(None)
                     errors.append(None)
                     dones.append(False)
-                    raw_k.extend(kinds[lo:hi])
-                    raw_t.extend(texts[lo:hi])
-                    raw_r.extend(refs[lo:hi])
-                    raw_off.extend(offs[lo:hi])
-                out_lo.append(len(flat_k))
-                raw_lo.append(len(raw_k))
-
-            out_struct = pa.StructArray.from_arrays(
-                [
-                    pa.array(flat_k, pa.string()),
-                    pa.array(flat_t, pa.string()),
-                    pa.array(flat_r, pa.string()),
-                    pa.array(flat_o, pa.int32()),
-                ],
-                fields=list(_OUT_SPAN),
-            )
-            raw_struct = pa.StructArray.from_arrays(
-                [
-                    pa.array(raw_k, pa.string()),
-                    pa.array(raw_t, pa.string()),
-                    pa.array(raw_r, pa.string()),
-                    pa.array(raw_off, pa.int32()),
-                ],
-                fields=list(_IN_SPAN),
-            )
+                    out.add([], [], [])
+                    raw.add(kinds[lo:hi], texts[lo:hi], refs[lo:hi], offs[lo:hi])
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(doc_ids, pa.string()),
                     pa.array(titles, pa.string()),
-                    pa.ListArray.from_arrays(
-                        pa.array(out_lo, pa.int32()), out_struct
-                    ),
+                    out.build(),
                     pa.array(errors, pa.string()),
-                    pa.ListArray.from_arrays(
-                        pa.array(raw_lo, pa.int32()), raw_struct
-                    ),
+                    raw.build(),
                     pa.array(dones, pa.bool_()),
                 ],
-                schema=mid_schema,
+                schema=mid_arrow,
             )
 
-    mid = df.mapInArrow(run, schema=_BALANCED_MID_DDL).persist(
+    mid = df.mapInArrow(run, schema=_BALANCED_MID).persist(
         StorageLevel.DISK_ONLY
     )
     normals = mid.filter(F.col("done")).select(
@@ -388,7 +333,7 @@ def extract_balanced(
         .select("doc_id", F.col("raw").alias("spans"))
         .repartition(df.sparkSession.sparkContext.defaultParallelism)
     )
-    out = normals.unionByName(extract_arrow(giants, extractor))
+    out = normals.unionByName(extract(giants, extractor))
     out._balanced_intermediate = mid
     return out
 

@@ -129,13 +129,10 @@ def quality_expr():
     )
 
 
-def quality_score(spark, sf_dir, spread: bool = False):
+def quality_score(spark, sf_dir):
     """Composite quality score: length, mean word length, stopword
-    ratio, punctuation ratio -- the usual cheap pretraining filters.
-    ``spread`` applies the scan-parallelism floor — set by the
-    histogram-quantile consumer, whose count() cannot prune the
-    quality expression; the plain driver row stays un-spread."""
-    docs = _t(spark, sf_dir, "documents", spread=spread)
+    ratio, punctuation ratio -- the usual cheap pretraining filters."""
+    docs = _t(spark, sf_dir, "documents")
     toks = F.expr(_TOKENS)
     n_tok = F.size(toks)
     mean_wl = F.round(

@@ -3,7 +3,8 @@ contract -- no Spark session needed, complements the node-differential
 fuzz with pure-structural guarantees over adversarial inputs:
 
 - totality: extract_spans never raises (crash parity is expressed as
-  error='reference_throw', everything else must be handled);
+  error='reference_throw', a null span offset as error='invalid_spans',
+  everything else must be handled);
 - determinism: same input -> same output, twice;
 - order contract: output span orders are exactly 0..n-1;
 - media preservation: every non-text input span survives (same
@@ -52,6 +53,9 @@ def span_docs(draw):
             unique=True,
         )
     )
+    # a null offset (nullable in SPAN_STRUCT) must quarantine, not raise
+    if offsets and draw(st.integers(min_value=0, max_value=9)) == 0:
+        offsets[draw(st.integers(0, len(offsets) - 1))] = None
     spans = []
     for i in range(n_text):
         spans.append(
@@ -102,7 +106,9 @@ def test_extract_spans_total_deterministic_ordered(spans, extractor):
         ]
         assert [s["media_ref"] for s in out1 if s["kind"] != "text"] == by_off
     else:
-        assert err1 == "reference_throw" and out1 == [] and title1 == ""
+        assert err1 in ("reference_throw", "invalid_spans")
+        assert out1 == [] and title1 == ""
+    assert (err1 == "invalid_spans") == any(s["offset"] is None for s in spans)
 
 
 # ------------------------------------------------------------------ #

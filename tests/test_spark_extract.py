@@ -1,5 +1,5 @@
 """Spark pipeline golden tests: both the production (zero-shuffle
-mapInPandas) and staged (columnar + applyInPandas) pipelines must
+mapInArrow) and staged (columnar + fusion tail) pipelines must
 reproduce the reference's golden span sequences on the t1 corpus."""
 
 import pytest
@@ -92,9 +92,15 @@ def test_unfiltered_paths_agree(spark, t1_df):
 
 
 def test_degenerate_span_inputs_both_paths(spark):
-    """Empty span lists, NULL span lists, media-only docs, and NULL
-    text payloads must flow through BOTH paths without crashing, with
-    identical outputs (locks the Arrow offsets/validity handling)."""
+    """Empty span lists, NULL span lists, media-only docs, NULL text
+    payloads and NULL span offsets must flow through every extraction
+    path -- production, staged, balanced (with a giant threshold low
+    enough that docs take the raw-giant route) and the per-doc
+    ``extract_spans`` -- without crashing, with identical outputs
+    (locks the Arrow offsets/validity handling)."""
+    from boilerpipe_coffee_spark.operators.pipeline import extract_balanced
+    from boilerpipe_coffee_spark.spans import extract_spans
+
     rows = [
         ("empty", []),
         ("null_spans", None),
@@ -102,28 +108,54 @@ def test_degenerate_span_inputs_both_paths(spark):
          [{"kind": "image", "text": None, "media_ref": "m1", "offset": 0}]),
         ("null_text",
          [{"kind": "text", "text": None, "media_ref": None, "offset": 0}]),
+        ("null_offset",
+         [{"kind": "text",
+           "text": "<body><p>words beside an unplaced image</p></body>",
+           "media_ref": None, "offset": 0},
+          {"kind": "image", "text": None, "media_ref": "m", "offset": None}]),
         ("normal",
          [{"kind": "text",
            "text": "<body><p>hello world this is fine text</p></body>",
            "media_ref": None, "offset": 0}]),
     ]
+    ex = "KeepEverythingExtractor"
     df = spark.createDataFrame(rows, schema=INTERLEAVED_SCHEMA)
-    prod = {r.doc_id: r for r in extract(df, "KeepEverythingExtractor").collect()}
-    staged = {
-        r.doc_id: r
-        for r in extract_staged(df, "KeepEverythingExtractor").collect()
-    }
-    assert set(prod) == set(staged) == {r[0] for r in rows}
+
+    def as_tuples(frame):
+        return {
+            r.doc_id: (
+                r.title,
+                [(s.kind, s.text, s.media_ref, s.order) for s in (r.spans or [])],
+                r.error,
+            )
+            for r in frame.collect()
+        }
+
+    prod = as_tuples(extract(df, ex))
+    staged = as_tuples(extract_staged(df, ex))
+    balanced_df = extract_balanced(df, ex, giant_chars=10)
+    balanced = as_tuples(balanced_df)
+    giants = balanced_df._balanced_intermediate.filter("NOT done").count()
+    balanced_df._balanced_intermediate.unpersist()
+    per_doc = {}
+    for doc_id, spans in rows:
+        title, out, error = extract_spans(spans, ex)
+        per_doc[doc_id] = (
+            title,
+            [(s["kind"], s["text"], s["media_ref"], s["order"]) for s in out],
+            error,
+        )
+    assert giants >= 1
+    assert set(prod) == set(staged) == set(balanced) == set(per_doc) \
+        == {r[0] for r in rows}
     for doc_id in prod:
-        a, b = prod[doc_id], staged[doc_id]
-        sa = [(s.kind, s.text, s.media_ref, s.order) for s in (a.spans or [])]
-        sb = [(s.kind, s.text, s.media_ref, s.order) for s in (b.spans or [])]
-        assert (a.title, sa, a.error) == (b.title, sb, b.error), doc_id
+        assert prod[doc_id] == staged[doc_id] == balanced[doc_id] \
+            == per_doc[doc_id], doc_id
     for doc_id in ("empty", "null_spans", "null_text"):
-        assert prod[doc_id].error is None and not prod[doc_id].spans
-    media = [(s.kind, s.media_ref, s.order) for s in prod["media_only"].spans]
-    assert media == [("image", "m1", 0)]
-    assert any(s.kind == "text" for s in prod["normal"].spans)
+        assert prod[doc_id][2] is None and not prod[doc_id][1]
+    assert prod["null_offset"] == ("", [], "invalid_spans")
+    assert prod["media_only"][1] == [("image", None, "m1", 0)]
+    assert any(s[0] == "text" for s in prod["normal"][1])
 
 
 @pytest.mark.parametrize(
